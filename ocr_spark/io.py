@@ -37,16 +37,61 @@ from pyspark.sql import (
     SparkSession,
     functions as F,
 )
+from pyspark.sql.types import StructField, StructType
 
 from ocr_spark.extract import ExtractCounters, extract
 from ocr_spark.partitioning import ordered
+from ocr_spark.schema import LINEAGE
 
 BUCKET_COL = "bucket"
+
+# The per-bucket lineage metrics in LINEAGE column order, as SQL text over
+# the BUCKET_COL column for ``observe``; ``{b}`` is the bucket id.
+_BUCKET_METRICS = {
+    "conv_min": "min(CASE WHEN bucket = {b} THEN conv_id END)",
+    "conv_max": "max(CASE WHEN bucket = {b} THEN conv_id END)",
+    "n_turns": "count(CASE WHEN bucket = {b} THEN 1 END)",
+    "n_errors": "count(CASE WHEN bucket = {b} AND error != '' THEN 1 END)",
+}
 
 
 def add_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         BUCKET_COL, F.pmod(F.hash("conv_id"), F.lit(n_buckets))
+    )
+
+
+def lineage_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType = LINEAGE
+) -> DataFrame:
+    """One-partition frame of lineage rows, ready to append. ``rows``
+    hold every field of ``schema`` except the trailing ``committed_at``,
+    which is ``current_timestamp()`` and so is fixed when the lineage
+    write is planned.
+
+    The rows enter as a pyarrow table, which Spark plans as a
+    ``LocalTableScan``: the commit is a JVM-only job. A frame built from a
+    list of tuples plans as ``Scan ExistingRDD`` over a pickled Python
+    RDD, so every commit would run a Python-worker task.
+
+    The row fields are declared nullable, so the Parquet files keep the
+    schema lineage has always been written with (optional columns, an
+    INT96 ``committed_at``) and old and new commits read back together.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fields = StructType(
+        [StructField(f.name, f.dataType) for f in schema.fields[:-1]]
+    )
+    table = pa.Table.from_pylist(
+        [dict(zip(fields.names, r)) for r in rows],
+        schema=to_arrow_schema(fields),
+    )
+    return (
+        spark.createDataFrame(table, fields)
+        .withColumn(schema.fields[-1].name, F.current_timestamp())
+        .coalesce(1)
     )
 
 
@@ -285,7 +330,15 @@ class ExtractWriter:
     ) -> list[int]:
         """Extract + write all uncommitted buckets. Returns the bucket ids
         committed by THIS invocation. ``fail_after_groups`` injects a
-        mid-run crash for the resume-idempotence test."""
+        mid-run crash for the resume-idempotence test.
+
+        Each group of buckets is one data write, which also observes the
+        per-bucket lineage metrics, then one lineage append. The
+        lineage frame is Arrow-built (``lineage_frame``) because a
+        tuple-list frame runs a Python-worker task on every commit, so
+        the data write stays the group's only Python-touching job.
+        ``committed_at`` is taken when the lineage write is planned,
+        after the group's data is written."""
         spark.conf.set(
             "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
@@ -310,36 +363,25 @@ class ExtractWriter:
                 passthrough=[BUCKET_COL],
                 counters=counters,
             )
-            ordered_ext = ext.sortWithinPartitions("conv_id", "turn_idx")
-            # per-bucket lineage stats ride the WRITE pass itself via
-            # Dataset.observe() (conditional aggregates, one set per
-            # bucket in the group) -> lineage rows LAST. The previous
-            # implementation re-read the just-written parquet — a second
-            # scan of 100% of the output at scale (measured: 19.1k ->
-            # 16.6k turns/s at group_size=32 in soak_pipeline). A bucket
-            # with no rows still gets a lineage row (n_turns=0, null
-            # conv range) so resume marks it done.
+            # one sort serves both the planned write's bucket ordering
+            # and the (conv_id, turn_idx) order of rows in each file
+            ordered_ext = ext.sortWithinPartitions(
+                BUCKET_COL, "conv_id", "turn_idx"
+            )
+            # per-bucket lineage stats ride the write pass itself via
+            # Dataset.observe(): four conditional aggregates per bucket,
+            # each parsed from SQL text in one call. A bucket with no
+            # rows still gets a lineage row (n_turns=0, null conv range)
+            # so resume marks it done.
             obs = Observation(f"lineage_{run_id}_g{gi}")
-            metric_cols = []
-            for b in group:
-                is_b = F.col(BUCKET_COL) == b
-                metric_cols.extend(
-                    [
-                        F.min(F.when(is_b, F.col("conv_id"))).alias(
-                            f"conv_min_{b}"
-                        ),
-                        F.max(F.when(is_b, F.col("conv_id"))).alias(
-                            f"conv_max_{b}"
-                        ),
-                        F.count(F.when(is_b, F.lit(1))).alias(
-                            f"n_turns_{b}"
-                        ),
-                        F.count(
-                            F.when(is_b & (F.col("error") != ""), F.lit(1))
-                        ).alias(f"n_errors_{b}"),
-                    ]
-                )
-            observed = ordered_ext.observe(obs, *metric_cols)
+            observed = ordered_ext.observe(
+                obs,
+                *(
+                    F.expr(f"{agg.format(b=b)} AS {name}_{b}")
+                    for b in group
+                    for name, agg in _BUCKET_METRICS.items()
+                ),
+            )
             if self.iceberg_table:
                 if spark.catalog.tableExists(self.iceberg_table):
                     observed.writeTo(
@@ -356,26 +398,12 @@ class ExtractWriter:
                     .parquet(str(self.data_dir))
                 )
             m = obs.get
-            lineage_rows = []
-            for b in group:
-                lineage_rows.append(
-                    (
-                        run_id,
-                        b,
-                        m[f"conv_min_{b}"],
-                        m[f"conv_max_{b}"],
-                        m[f"n_turns_{b}"],
-                        m[f"n_errors_{b}"],
-                    )
-                )
-            lin_df = (
-                spark.createDataFrame(
-                    lineage_rows,
-                    "run_id string, partition_id int, conv_min string, "
-                    "conv_max string, n_turns long, n_errors long",
-                )
-                .withColumn("committed_at", F.current_timestamp())
-                .coalesce(1)
+            lin_df = lineage_frame(
+                spark,
+                [
+                    (run_id, b, *(m[f"{name}_{b}"] for name in _BUCKET_METRICS))
+                    for b in group
+                ],
             )
             if self.iceberg_table:
                 if spark.catalog.tableExists(self._lineage_table):

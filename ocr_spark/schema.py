@@ -82,6 +82,17 @@ LINEAGE = T.StructType(
     ]
 )
 
+# streaming lineage — one row per committed micro-batch
+# (ocr_spark.streaming.extract_stream_with_lineage).
+STREAM_LINEAGE = T.StructType(
+    [
+        T.StructField("batch_id", T.LongType(), False),
+        T.StructField("n_turns", T.LongType(), False),
+        T.StructField("n_errors", T.LongType(), False),
+        T.StructField("committed_at", T.TimestampType(), False),
+    ]
+)
+
 # overrides — manual-correction upsert table (SURVEY.md O13; reference GUI
 # edit of the final text, /root/reference/README.md:28).
 OVERRIDES = T.StructType(

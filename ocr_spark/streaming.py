@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ocr_spark.extract import extract
-from ocr_spark.schema import TRANSCRIPTS
+from ocr_spark.io import lineage_frame
+from ocr_spark.schema import STREAM_LINEAGE, TRANSCRIPTS
 
 
 def read_transcript_stream(
@@ -345,16 +346,11 @@ def extract_stream_with_lineage(
             ).collect()[0]
         finally:
             batch_df.unpersist()
-        (
-            spark.createDataFrame(
-                [(batch_id, stats.n_turns, stats.n_errors or 0)],
-                "batch_id long, n_turns long, n_errors long",
-            )
-            .withColumn("committed_at", F.current_timestamp())
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(lineage_dir)
-        )
+        lineage_frame(
+            spark,
+            [(batch_id, stats.n_turns, stats.n_errors or 0)],
+            STREAM_LINEAGE,
+        ).write.mode("append").parquet(lineage_dir)
 
     writer = (
         ext.writeStream.foreachBatch(commit_batch)

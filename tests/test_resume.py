@@ -171,6 +171,110 @@ def test_empty_bucket_in_group_commits_cleanly(spark, writer):
                       n_buckets=4) == []
 
 
+def test_lineage_files_read_back_as_lineage_schema(
+    spark, tiny_transcripts, writer
+):
+    # every lineage file carries schema.LINEAGE's names and types, and
+    # committed_at stays the INT96 timestamp earlier lineage files hold,
+    # so commits from before and after a writer change resume together
+    import pyarrow.parquet as pq
+
+    from ocr_spark.schema import LINEAGE
+
+    sdf = spark.createDataFrame(tiny_transcripts)
+    writer.run(spark, sdf, "rs", n_buckets=4, group_size=2)
+    files = sorted(writer._run_lineage_dir("rs").glob("*.parquet"))
+    assert len(files) == 2, "one lineage file per bucket group"
+    want = [(f.name, f.dataType) for f in LINEAGE.fields]
+    for f in files:
+        got = spark.read.parquet(str(f)).schema
+        assert [(c.name, c.dataType) for c in got.fields] == want
+        col = pq.ParquetFile(f).schema.column(len(want) - 1)
+        assert (col.name, col.physical_type) == ("committed_at", "INT96")
+
+
+def test_bucket_files_are_in_conv_turn_order(
+    spark, tiny_transcripts, writer
+):
+    # rows inside every data file are in (conv_id, turn_idx) order,
+    # whatever the salted repartition did to the group's rows
+    import pyarrow.parquet as pq
+
+    sdf = spark.createDataFrame(tiny_transcripts)
+    writer.run(spark, sdf, "ro", n_buckets=4, group_size=4, partitions=4,
+               salt_threshold=20)
+    files = sorted(writer.data_dir.glob("bucket=*/*.parquet"))
+    assert files
+    n = 0
+    for f in files:
+        keys = pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pylist()
+        rows = [(r["conv_id"], r["turn_idx"]) for r in keys]
+        assert rows == sorted(rows), f"{f.parent.name}/{f.name} out of order"
+        n += len(rows)
+    assert n == len(tiny_transcripts)
+
+
+def test_group_of_32_buckets_lineage_matches_golden(
+    spark, tiny_transcripts, tiny_golden, writer, monkeypatch
+):
+    # one group of 32 buckets (128 observe metrics): every bucket's
+    # lineage row equals a pandas groupby of the golden, keyed by the
+    # writer's own bucket function; empty buckets read n_turns=0 with a
+    # null conv range. The lineage commit plans as a LocalTableScan, so
+    # it runs no Python-worker task.
+    import ocr_spark.io as io
+
+    frames = []
+    build = io.lineage_frame
+
+    def spy(*args, **kwargs):
+        frames.append(build(*args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(io, "lineage_frame", spy)
+
+    sdf = spark.createDataFrame(tiny_transcripts)
+    done = writer.run(spark, sdf, "r32", n_buckets=32, group_size=32)
+    assert sorted(done) == list(range(32))
+
+    assert len(frames) == 1
+    plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+    buckets = io.add_bucket(
+        spark.createDataFrame(tiny_golden[["conv_id"]].drop_duplicates()), 32
+    ).toPandas()
+    g = tiny_golden.merge(buckets, on="conv_id", validate="many_to_one")
+    want = (
+        g.assign(is_err=g.error != "")
+        .groupby("bucket")
+        .agg(
+            n_turns=("conv_id", "size"),
+            n_errors=("is_err", "sum"),
+            conv_min=("conv_id", "min"),
+            conv_max=("conv_id", "max"),
+        )
+        .reindex(range(32))
+    )
+    want[["n_turns", "n_errors"]] = (
+        want[["n_turns", "n_errors"]].fillna(0).astype("int64")
+    )
+    lin = (
+        writer.lineage(spark)
+        .filter("run_id = 'r32'")
+        .toPandas()
+        .set_index("partition_id")
+        .sort_index()
+    )
+    assert list(lin.index) == list(range(32))
+    for col in ("n_turns", "n_errors"):
+        assert lin[col].tolist() == want[col].tolist(), col
+    for col in ("conv_min", "conv_max"):
+        got = [None if pd.isna(v) else v for v in lin[col]]
+        exp = [None if pd.isna(v) else v for v in want[col]]
+        assert got == exp, col
+
+
 def test_incremental_dedup_store_roundtrip_idempotent(
     spark, sf001_dir, tmp_path
 ):
